@@ -1,21 +1,10 @@
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: test verify verify-plain bench plans smoke scaling stress kafka-smoke certify certify-apply attribution closeout
+.PHONY: test verify verify-plain bench plans smoke scaling stress kafka-smoke
 
-test:
-	python -m pytest tests/ -x -q
-
-certify:  # exits 1 on STALE uncertified rows; pending (post-commit) rows advise
-	python tools/certify.py
-
-certify-apply:  # append pending driver rows to CERTIFIED, bump CERTIFIED_THROUGH
-	python tools/certify.py --apply
-
-attribution:  # attribute round-over-round bench movers (fast: >0.5s only)
-	python tools/attribute_honest.py --fast
-
-closeout: certify test attribution  # end-of-round ritual: snapshot commit must be green
-	@echo "closeout OK — safe to snapshot"
+test:  # the ROADMAP Tier-1 command, verbatim
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 verify:
 	python tools/verify_oracle.py --sf $(SF_DIR) --rows-only-too
@@ -45,7 +34,7 @@ smoke:  # the driver's t1 check through the real contract surface
 	python -c "import sys; sys.path.insert(0, '.'); \
 	import __spark_entry__ as e; \
 	from pyspark.sql import SparkSession; \
-	s = SparkSession.builder.master('local[32]').getOrCreate(); \
+	s = SparkSession.builder.master('local[*]').getOrCreate(); \
 	print('entry rows:', e.entry(s).count()); \
 	q, o = e.queries(), e.oracle_sql(); \
 	print(len(q), 'queries,', len(o), 'oracles')"

@@ -115,8 +115,7 @@ def component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # small fraction of the corpus (most documents are unique), so the
     # iterating frame shrinks by ~the dedup rate — at 100 TB this is
     # the difference between iterating over the whole corpus and over
-    # just the duplicate neighborhoods. (Round-5 change per the r4
-    # verdict; the driver row re-verifies via RECERTIFY.)
+    # just the duplicate neighborhoods.
     docs = load(spark, sf_dir, "documents").select("doc_id")
     # edges is undirected (both orientations present), so doc_a alone
     # covers every incident node.

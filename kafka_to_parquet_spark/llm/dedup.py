@@ -583,9 +583,9 @@ def _angular_sig_terms() -> list[str]:
 
 def angular_fp_bits_sql() -> str:
     """The ``fp`` CTE's signature expression — the shared single source
-    for every angular-LSH oracle (q_dedup_embedding_lsh's inline twin
-    below is certified-frozen this round; tests/test_round7.py pins the
-    two byte-identical so they cannot drift apart silently)."""
+    for every angular-LSH oracle (q_dedup_embedding_lsh keeps an inline
+    twin; tests/test_round7.py pins the two byte-identical so they
+    cannot drift apart silently)."""
     from kafka_to_parquet_spark.functions.vectors import duck_dot_literal
 
     return " + ".join(
@@ -599,8 +599,7 @@ def angular_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-bucket-capped banded signature index (vec_id, b, k, sig):
     the Spark twin of ``capped_band_cte`` over ``angular_signatures``.
     New consumers (q_decontaminate_embed) build on this helper;
-    q_dedup_embedding_lsh keeps its byte-identical inline block until
-    the certification window allows consolidating it here
+    q_dedup_embedding_lsh keeps its byte-identical inline block
     (tests/test_round7.py asserts the outputs match)."""
     sig = angular_signatures(spark, sf_dir)
     band_bits = ANGULAR_BITS // ANGULAR_BANDS

@@ -28,7 +28,6 @@ surface; this is part of the mandated LLM-pipeline extension
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -344,7 +343,7 @@ def _prefix_postings(spark: SparkSession, sf_dir: str, prefix_len_sql: str):
 # 260M-posting pair corpus ran measured-optimal at ~65M postings/pass
 # (S=4: 212 s vs the 392-416 s single-pass cliff under the OLD
 # share-one-token plan whose verification scratch scaled with posting
-# mass). The env knob re-tunes it without code changes.
+# mass).
 PPJOIN_TARGET_POSTINGS = 80_000_000
 
 # Memoized per-(session, sf_dir) posting count — sum over docs of
@@ -370,9 +369,7 @@ def ppjoin_shards(
 ) -> int:
     """Posting-universe shard count the r12/r13 PPJoin shard loop
     WOULD select for this corpus — S = ceil(posting_count /
-    ``PPJOIN_TARGET_POSTINGS``), clamped to [1, 64], pinnable via
-    ``$KTPS_PPJOIN_SHARDS`` / re-budgeted via
-    ``$KTPS_PPJOIN_TARGET_POSTINGS``.
+    ``PPJOIN_TARGET_POSTINGS``), clamped to [1, 64].
 
     Since round 14 NO query executes a shard loop: the counting form
     of the prefix filter (q_dedup_jaccard_prefix /
@@ -387,17 +384,9 @@ def ppjoin_shards(
     re-derives this exact integer arithmetic in SQL, certified by the
     driver's hash check) so an operator can still read how many
     budget-sized passes a corpus' posting mass represents."""
-    env = os.environ.get("KTPS_PPJOIN_SHARDS", "")
-    if env:
-        return max(1, int(env))
     if spark is None or sf_dir is None:
         return 1
-    target = max(
-        1,
-        int(os.environ.get("KTPS_PPJOIN_TARGET_POSTINGS", "0"))
-        or PPJOIN_TARGET_POSTINGS,
-    )
-    return min(64, max(1, -(-_posting_count(spark, sf_dir) // target)))
+    return min(64, max(1, -(-_posting_count(spark, sf_dir) // PPJOIN_TARGET_POSTINGS)))
 
 
 @query(

@@ -16,10 +16,6 @@ Python UDFs anywhere.
 Reference parity note: the reference (src/main.rs:59-294) is a
 single-column Kafka→parquet ETL with no analytics; this module is
 part of the mandated training-data extension tier (SURVEY §2 X-rows).
-
-Registration discipline: this module registers LAST (see
-registry.load_all) so its never-certified names queue behind every
-earlier declaration in the driver's bounded gate window.
 """
 
 from __future__ import annotations

@@ -1,13 +1,6 @@
-"""Round-10 session additions (batch9) — one module across domains ON
-PURPOSE (the batch7/batch8 discipline: registered LAST in
-``registry.load_all`` so these declarations queue behind any earlier
-never-certified names in the driver's bounded window).
-
-Round 10 opens with all 306 prior declarations certified and only the
-five RoundLoop RECERTIFY names ahead in the queue, so ~20 window slots
-are free for genuinely new topology. The batch lands the round-9
-verdict's north-star candidates plus the training-data-pipeline gaps
-they compose with:
+"""Round-10 session additions (batch9), one module across domains.
+The batch lands the round-9 verdict's north-star candidates plus the
+training-data-pipeline gaps they compose with:
 
 - q_mix_curriculum  — quality-phased curriculum assembly (phase =
                     corpus-relative TTR band; per-phase source mix) —

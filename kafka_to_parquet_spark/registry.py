@@ -51,364 +51,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The driver's per-round correctness gate records only the FIRST
-# GATE_WINDOW entries of ``queries()``.
-GATE_WINDOW = 50
-
-# Queries that already hold an accepted driver row in a prior round's
-# CORRECTNESS_r{N}.json (green hash-match, or an intentional rows-only
-# row for sketch/LSH queries). ``ordered_queries()`` floats
-# never-certified queries to the front of the dict until every declared
-# query has a row on record. Append names here once their round result
-# lands — and REMOVE (or add to ``RECERTIFY``) any name whose query or
-# shared helper code changes, so the change earns a fresh driver row
-# instead of coasting on a stale certification.
-CERTIFIED: set[str] = {
-    # round 1 (CORRECTNESS_r01.json): 48 hash-green + 1 accepted rows-only.
-    "q_agg_groupby", "q_agg_distinct", "q_agg_approx_distinct",
-    "q_agg_rollup", "q_agg_cube", "q_agg_global", "q_agg_pivot",
-    "q_agg_conditional", "q_agg_listagg", "q_agg_unpivot",
-    "q_tpch_q6", "q_tpch_q3", "q_tpch_q5", "q_join_asof",
-    "q_agg_salted", "q_agg_percentile", "q_agg_histogram", "q_agg_stats",
-    "q_text_levenshtein", "q_join_inner", "q_join_outer",
-    "q_join_semi_anti", "q_join_broadcast", "q_join_range",
-    "q_join_cross", "q_join_range_binned", "q_join_skew_salted",
-    "q_project_compute", "q_filter_pred", "q_distinct",
-    "q_set_union", "q_set_intersect", "q_set_except",
-    "q_sort", "q_topk", "q_win_rank", "q_win_lag_lead",
-    "q_win_running", "q_win_topk_group", "q_win_cdf",
-    "q_win_running_scalable", "q_str_funcs", "q_date_funcs",
-    "q_math_funcs", "q_cond_funcs", "q_json_funcs",
-    "q_text_tokens", "q_text_stats", "q_text_quality",
-    # round 2 (CORRECTNESS_r02.json): 33 hash-green + 2 accepted
-    # rows-only (q_dedup_minhash_lsh, q_stream_watermark) + the fixed
-    # q_agg_collect. Every declared query now holds a driver row.
-    "q_agg_collect", "q_array_funcs", "q_count_batcher", "q_decode_utf8",
-    "q_dedup_components", "q_dedup_embedding", "q_dedup_embedding_lsh",
-    "q_dedup_exact", "q_dedup_minhash_lsh", "q_dedup_ngram_jaccard",
-    "q_dedup_simhash", "q_dedup_simhash_pairs", "q_delete_compact",
-    "q_kafka_scan", "q_multimodal_decode", "q_multimodal_framesample",
-    "q_multimodal_join", "q_multimodal_resize", "q_parquet_roundtrip",
-    "q_partition_pruning", "q_project_payload", "q_sample_stratified",
-    "q_sim_ivf", "q_sim_topk", "q_str_concat", "q_stream_custom_state",
-    "q_stream_dedup", "q_stream_session", "q_stream_sliding",
-    "q_stream_tumbling", "q_stream_watermark", "q_synth_generator",
-    "q_text_bpe_tokens", "q_text_fingerprint", "q_text_langid",
-    "q_udf_pandas_cosine",
-    # round 3 (CORRECTNESS_r03.json): 49 hash-green + 1 accepted
-    # rows-only (q_agg_approx_quantile, allowlisted sketch).
-    "q_agg_grouping_sets", "q_agg_approx_quantile", "q_agg_mode",
-    "q_profile_table", "q_winsorize", "q_graph_pagerank",
-    "q_graph_degree", "q_copurchase_pairs", "q_graph_triangles",
-    "q_copurchase_pmi", "q_funnel", "q_ts_gapfill", "q_win_range_time",
-    "q_outliers_zscore", "q_sessionize", "q_ts_rollup_hier",
-    "q_incr_agg", "q_retention_cohort", "q_ts_locf", "q_dedup_window",
-    "q_tpch_q4", "q_tpch_q10", "q_tpch_q14", "q_tpch_q18", "q_tpch_q7",
-    "q_tpch_q8", "q_tpch_q13", "q_tpch_q17", "q_tpch_q22", "q_tpch_q1",
-    "q_tpch_q2", "q_tpch_q9", "q_tpch_q11", "q_tpch_q12", "q_tpch_q15",
-    "q_tpch_q16", "q_tpch_q19", "q_tpch_q20", "q_tpch_q21",
-    "q_scd2_intervals", "q_quality_checks", "q_zorder_stats",
-    "q_table_checksum", "q_snapshot_diff", "q_json_variant",
-    "q_udtf_wordcounts", "q_merge_upsert", "q_join_dpp",
-    "q_jsonl_roundtrip", "q_csv_scan",
-    # round 4 (CORRECTNESS_r04.json): 40 accepted rows (all hash-green;
-    # q_dedup_substring is deliberately NOT here — its r4 row was red
-    # from the duck_h31 lambda-shadowing oracle bug, fixed in round 5;
-    # it stays pending so the fixed oracle re-earns a green row).
-    "q_ann_recall", "q_bm25", "q_chunk_docs",
-    "q_compact_files", "q_corpus_mix", "q_corpus_shuffle",
-    "q_decontaminate", "q_dedup_containment", "q_dedup_incremental",
-    "q_dedup_jaccard_prefix", "q_dedup_keep", "q_dedup_minhash",
-    "q_dsir_logratio", "q_embed_quantize", "q_heavy_hitters_cms",
-    "q_join_asof_nearest", "q_kmeans3", "q_kmeans_step",
-    "q_orc_roundtrip", "q_pack_greedy", "q_pipeline_yield",
-    "q_rerank_mmr", "q_sample_weighted", "q_search_and",
-    "q_search_rrf", "q_semdedup", "q_sim_topk_int8",
-    "q_split_assign", "q_stream_join", "q_stream_join_outer",
-    "q_stream_static_join", "q_stream_upsert", "q_text_bigram_logprob",
-    "q_text_bigrams", "q_text_entropy", "q_text_pii",
-    "q_text_repetition", "q_text_unigram_logprob", "q_tfidf_top_term",
-    "q_vocab_topk",
-    # round 5 (CORRECTNESS_r05.json): 50 accepted rows, all hash-green —
-    # the 18 round-5 declarations, the re-earned q_dedup_substring
-    # (fixed oracle), and 31 RECERTIFY/rotation rows already listed above.
-    "q_chi2_independence", "q_dedup_bag", "q_dedup_keep_best",
-    "q_dedup_minhash_incr", "q_dedup_span_strip", "q_dedup_substring",
-    "q_dup_cluster_stats", "q_event_pattern", "q_join_bucketed",
-    "q_knn_graph", "q_knn_graph_ivf", "q_knn_multiprobe",
-    "q_lsh_recall", "q_outliers_mad", "q_quality_gopher",
-    "q_sample_temperature", "q_select_topq", "q_skyline",
-    "q_ttr_source",
-    # round 6 (CORRECTNESS_r06.json): 50 accepted rows, all hash-green —
-    # 43 first-time rows for round-6 declarations plus the 7 RECERTIFY
-    # re-verifications (already listed above; their entries below were
-    # cleared at round-7 start).
-    "q_active_users", "q_assoc_rules", "q_attribution",
-    "q_benford", "q_bfs_levels", "q_burstiness",
-    "q_churn_flags", "q_cohort_ltv", "q_corr_matrix",
-    "q_funnel3", "q_funnel_window", "q_graph_assortativity",
-    "q_graph_jaccard", "q_growth_accounting", "q_hhi_concentration",
-    "q_interarrival_dist", "q_interval_union", "q_join_asof_tolerance",
-    "q_join_interval_overlap", "q_join_null_aware", "q_kendall_tau",
-    "q_ks_test", "q_mann_whitney", "q_markov_entropy",
-    "q_mutual_information", "q_ols_trend", "q_psi_drift",
-    "q_rate_spike", "q_repurchase_gaps", "q_runs_test",
-    "q_seasonal_strength", "q_seasonality_dow", "q_spearman_corr",
-    "q_streak_longest", "q_survival_curve", "q_theil_sen",
-    "q_time_weighted_avg", "q_ts_autocorr", "q_ts_cusum",
-    "q_ts_ewma", "q_ts_rolling_median", "q_user_type_overlap",
-    "q_welch_ttest",
-    # round 7 (CORRECTNESS_r07.json): 50 accepted rows, all hash-green
-    # except the declared rows-only sketch/streaming ops — the 47
-    # first-time rows below plus the 3 RECERTIFY re-verifications
-    # (q_semdedup, q_dedup_jaccard_prefix, q_dedup_containment —
-    # already listed above; their RECERTIFY entries were cleared at
-    # round-8 start).
-    "q_avro_roundtrip", "q_bloom_fpr_audit", "q_bpe_merge_step",
-    "q_cms_error_bands", "q_consumer_lag", "q_cooccur_pmi",
-    "q_dataset_card", "q_decontaminate_embed", "q_dedup_typo",
-    "q_dup_provenance", "q_embed_dimstats", "q_embed_outliers",
-    "q_embed_pq", "q_gini_tokens", "q_graph_kcore",
-    "q_graph_label_prop", "q_hard_negatives", "q_hash_uniformity",
-    "q_keyness", "q_kmv_distinct", "q_langid_confusion",
-    "q_minhash_bbit", "q_minhash_est_err", "q_mix_token_budget",
-    "q_multimodal_hashdup", "q_ndcg_bm25", "q_ngram_novelty",
-    "q_order_size_dist", "q_pca_power", "q_pq_adc_recall",
-    "q_price_index", "q_rfm_segments", "q_schema_evolution",
-    "q_search_phrase", "q_skew_report", "q_source_vocab_overlap",
-    "q_srm_check", "q_stratified_sample", "q_stream_topk",
-    "q_stream_transitions", "q_token_fertility", "q_ts_sax_motif",
-    "q_unique_shingle_share", "q_vocab_coverage", "q_vocab_growth",
-    "q_word_burstiness", "q_zipf_slope",
-    # round 8 (CORRECTNESS_r08.json): 50 accepted rows, all hash-green —
-    # the 22 first-time batch8 rows below, the q_token_fertility
-    # RECERTIFY re-verification (already listed above; entry cleared at
-    # round-9 start), and 27 rotation re-certifications.
-    "q_abtest_cuped", "q_abtest_power", "q_bootstrap_ci",
-    "q_bpe_apply", "q_bpe_learn_k", "q_collocation_llr",
-    "q_graph_clustering_coeff", "q_graph_modularity", "q_kmeans_silhouette",
-    "q_kmv_union_audit", "q_kn_continuation", "q_multimodal_probe",
-    "q_rocchio_expand", "q_search_proximity", "q_split_leakage",
-    "q_sssp_weighted", "q_stl_decompose", "q_text_rake",
-    "q_text_textrank", "q_ts_anomaly_stl", "q_ts_spectral_dow",
-    "q_winnowing_fingerprint",
-    # round 10 (CORRECTNESS_r10.json): 50 accepted rows — the 18
-    # first-time batch9 rows below, the 9 RECERTIFY re-verifications
-    # (RoundLoop'd kernels + h62-widened fingerprint family, already
-    # listed above; entries cleared at round-11 start), and rotation
-    # re-certifications.
-    "q_changepoint_cusum", "q_cluster_dbscan_grid", "q_coreset_kcenter",
-    "q_dedup_span_maximal", "q_dedup_url", "q_entropy_filter",
-    "q_knn_classify", "q_link_adamic_adar", "q_lm_bigram_logprob",
-    "q_mix_curriculum", "q_pack_sequences", "q_pad_waste_buckets",
-    "q_pii_scrub", "q_quality_ensemble", "q_select_budget",
-    "q_source_ngram_leak", "q_stream_minhash_incr", "q_suffix_lrs",
-    # round 11 (CORRECTNESS_r11.json): 50 accepted rows — the 6
-    # first-time batch10 rows below, the 5 RECERTIFY re-verifications
-    # (suffix-LRS rewrite, coreset RoundLoop, PPJoin persisted
-    # postings, widened URL fixture — already listed above; entries
-    # cleared at round-12 start), and rotation re-certifications.
-    "q_contamination_attrib", "q_contamination_ladder", "q_dup_width_curve",
-    "q_fertility_bytes", "q_filter_venn", "q_repetition_windows",
-    # round 12 (CORRECTNESS_r12.json): 50 accepted rows — the 2
-    # first-time batch11 rows below, the 7 RECERTIFY re-verifications
-    # (sharded PPJoin path, suffix-LRS cache parking, edge-feature
-    # graph kernels — already listed above; entries cleared at
-    # round-13 start), and rotation re-certifications.
-    "q_quant_error_curve", "q_sample_hash_stratified",
-    # CORRECTNESS_r13.json: applied by tools/certify.py --apply.
-    "q_shard_balance",
-    # === certify-apply insertion point (tools/certify.py --apply) ===
-}
-
-# Highest CORRECTNESS_r{N}.json round whose bookkeeping has been
-# applied to CERTIFIED/RECERTIFY above. Accepted rows in NEWER files
-# are "pending": the driver writes its rows AFTER the round's final
-# commit, so at round open they legitimately aren't in CERTIFIED yet.
-# The guard (tests/test_registry.py / tools/certify.py) warns on
-# pending rows and fails only on uncertified rows from rounds already
-# applied — run `make certify-apply` (or tools/certify.py --apply) to
-# append pending names and bump this.
-CERTIFIED_THROUGH: int = 14
-
-# Certified queries whose implementation (or a shared helper on their
-# path) changed since their last driver row — they jump the rotation
-# queue so the change is re-verified in THIS round's window. Clear an
-# entry once the new round's row lands.
-# (round-5 entries all landed green rows in CORRECTNESS_r05.json and
-# were cleared at round-6 start.)
-# (round-6 entries — q_knn_graph, q_knn_graph_ivf, q_knn_multiprobe,
-# q_kmeans_step, q_semdedup, q_tpch_q21, q_dedup_span_strip — all
-# landed green rows in CORRECTNESS_r06.json and were cleared at
-# round-7 start.)
-# (round-7 entries — q_semdedup, q_dedup_jaccard_prefix,
-# q_dedup_containment — all landed green rows in CORRECTNESS_r07.json
-# and were cleared at round-8 start.)
-# (round-8 entry — q_token_fertility — landed a green row in
-# CORRECTNESS_r08.json and was cleared at round-9 start.)
-# (round-10 entries — the RoundLoop'd iterative kernels and the
-# h62-widened fingerprint family — all landed green rows in
-# CORRECTNESS_r10.json and were cleared at round-11 start.)
-# Round-11 entries:
-# - q_coreset_kcenter: per-round dmin relation now persists through
-#   the deferred RoundLoop (round-10 verdict item 2 — the K² chained-
-#   lineage recompute, 80 exchanges → 11). Values unchanged by
-#   construction, but the rewritten loop body must earn a fresh row.
-# - q_dedup_url: fixture widened 6 → 8 variants per group so the
-#   oracle's group structure pins host-case and param-sort (round-11
-#   advisor item 3) — output VALUES changed (both engines in
-#   lockstep), so it must earn a fresh driver row.
-# - q_suffix_lrs: rewritten level pipeline (dup-filtered levels,
-#   direct gram seed at SFX_START, batched bracket probe — round-10
-#   verdict item 5, 6.5 s → ~3.2 s at sf0.1). Values unchanged by
-#   construction (corner pins in tests/test_batch9_ops.py), but the
-#   new pipeline must earn a fresh driver row.
-# - q_dedup_jaccard_prefix / q_dedup_containment: the shared PPJoin
-#   posting tables now persist through a registered feature cache
-#   (minhash._POSTINGS_CACHE) — without it the Jaccard self-join's two
-#   aliases re-executed the whole postings pipeline (~65 GB scratch at
-#   sf≈100, disk-fatal). Values unchanged; plan changed.
-# (round-11 entries — q_coreset_kcenter, q_dedup_url, q_suffix_lrs,
-# q_dedup_jaccard_prefix, q_dedup_containment — all landed green rows
-# in CORRECTNESS_r11.json and were cleared at round-12 start.)
-# Round-12 entries:
-# - q_dedup_jaccard_prefix / q_dedup_containment: candidate generation
-#   now routes through minhash._sharded_ppjoin so the
-#   $KTPS_PPJOIN_SHARDS knob can bound the posting-universe working
-#   set (round-11 verdict item 3 — the sf≈100 spill-bound cell's
-#   mitigation is now code, not docstring). Default S=1 keeps the
-#   single-pass plan; values unchanged by construction (sharding by
-#   pmod(h, S) partitions the equi-join's match space exactly; pinned
-#   by tests/test_prefix_lossless.py), but the restructured path must
-#   earn a fresh driver row.
-# - q_suffix_lrs: the persisted token relation is now parked in the
-#   registered cache (round-11 advisor item 3 — both return paths'
-#   plans read it, so it leaked per-invocation in a long-lived
-#   session). Values unchanged; lifecycle changed.
-# - q_sssp_weighted / q_text_textrank / q_graph_modularity /
-#   q_graph_pagerank: their decorated edge relations moved into the
-#   graph.edge_feature feature-level cache (round-11 verdict item 4 —
-#   honest per-sample cost is now rounds+audits, graph construction
-#   amortizes like the other shared feature tables; sssp 4.5→3.4 s,
-#   textrank 4.7→2.0 s, modularity 3.2→1.6 s at sf0.1). Values
-#   unchanged by construction (same plans, cached), but the
-#   restructured path must earn a fresh driver row.
-# (round-12 entries — q_dedup_jaccard_prefix, q_dedup_containment,
-# q_suffix_lrs, q_sssp_weighted, q_text_textrank, q_graph_modularity,
-# q_graph_pagerank — all landed green rows in CORRECTNESS_r12.json and
-# were cleared at round-13 start.)
-# (round-13 entries — q_dedup_jaccard_prefix, q_dedup_containment,
-# q_sssp_weighted: auto-sharded PPJoin default + shuffle-free SSSP
-# seed — all landed green rows in CORRECTNESS_r13.json and were
-# cleared at round-14 start.)
-# (round-14 entries — q_dedup_containment, q_dedup_jaccard_prefix,
-# q_lsh_recall, q_shard_balance, q_dedup_minhash_lsh, q_ngram_novelty,
-# q_copurchase_pairs, q_copurchase_pmi, q_graph_jaccard,
-# q_graph_triangles, q_graph_clustering_coeff, q_link_adamic_adar,
-# q_graph_modularity: counting prefix filter, banded-join projection,
-# novelty join-back removal, _part_pairs edge-feature cache — all
-# landed green rows in CORRECTNESS_r14.json and were cleared at
-# round-15 start. Their change rationales, kept for the record:)
-# Round-14 entries:
-# - q_dedup_containment: candidate generation moved to the COUNTING
-#   form of the prefix filter (round-13 verdict item 2 — the
-#   share-one-token form had no second-side filter and a candidate
-#   set ~400× the answer): a's prefix is extended by K-1 tokens and a
-#   pair must share >= min(K, ceil(tau*|a|)) of them (per-pair match
-#   count aggregate). Lossless by the missing-token budget (pinned in
-#   tests/test_prefix_lossless.py) — values unchanged by
-#   construction, but the plan changed (single-pass now: counting and
-#   pmod token-sharding are mutually exclusive, and the counting form
-#   removes the verify footprint sharding bounded).
-# - q_dedup_jaccard_prefix: same counting form (each side's prefix
-#   extends K-1 tokens; pair must share >= min(K, ceil(tau*n) per
-#   side) of them) — 124,980 -> 840 candidates at sf0.1, verification
-#   over AQE broadcasts, the r12/r13 shard loop removed. Lossless by
-#   the two-sided missing-budget argument (adversarial corpus test);
-#   values unchanged, plan changed.
-# - q_lsh_recall: consumes q_dedup_jaccard_prefix's plan as its truth
-#   side — transitively re-certify.
-# - q_shard_balance: shares the restructured posting-table accessor
-#   (_cached_postings — per-name lazy persists). Plan and values
-#   unchanged by construction, but the shared helper changed.
-# - q_dedup_minhash_lsh: the MLlib approxSimilarityJoin sides are now
-#   projected to (doc_id, features) before the join (guide §2.3 —
-#   the datasetA/datasetB structs used to carry lang/source and the
-#   full shingle arrays through the banded exchange). Values
-#   unchanged (the output reads only doc ids + distance), but the
-#   plan changed.
-# - q_ngram_novelty: the per-hash distinct-doc join-back is gone —
-#   one groupBy(hash){count, min(doc), max(doc)} (ndocs==1 iff
-#   min==max), novel counts re-aggregated by the single owning doc,
-#   n_ngrams computed as size(toks)-2 with no explode; the eager
-#   localCheckpoint is removed. Values unchanged by construction
-#   (same novelty definition; oracle untouched), but the plan
-#   changed.
-# - q_copurchase_pairs / q_copurchase_pmi / q_graph_jaccard /
-#   q_graph_triangles / q_graph_clustering_coeff / q_link_adamic_adar /
-#   q_graph_modularity: the shared co-purchase pair projection
-#   (_part_pairs) now serves through the edge_feature cache (one
-#   build, seven consumers). Values unchanged by construction (same
-#   relation), but every consumer's plan now reads the persisted
-#   feature table.
-# Round-15 entries:
-# - q_dup_width_curve: each per-width leg's two-phase-planned
-#   count_distinct(doc_id) (two window-sized exchanges per leg) is
-#   replaced by min/max (nd >= 2 is min(doc_id) != max(doc_id) — the
-#   q_ngram_novelty identity), leaving one map-side-combinable
-#   exchange per leg (24 -> 16 Exchange). Values unchanged by
-#   construction (same per-wh counts and dup test; oracle untouched),
-#   but the plan changed.
-# - q_cluster_dbscan_grid: cell/core/adj move into a registered
-#   feature cache (was: raw per-invocation persists deduped only by
-#   the CacheManager's identical-plan match) and superseded CC rounds
-#   park in the RoundLoop registry with deterministic localCheckpoint
-#   block release (cache.py LogicalRDD unpersist). Values and plan
-#   unchanged by construction; lifecycle changed.
-RECERTIFY: set[str] = {
-    "q_dup_width_curve", "q_cluster_dbscan_grid",
-}
-
-
-def _round_number() -> int:
-    """1-based current round, inferred from how many CORRECTNESS_r*.json
-    files the driver has already written next to the package."""
-    import glob
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return len(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))) + 1
-
-
-def ordered_queries() -> dict[str, QueryFn]:
-    """Registry reordered for the driver's bounded correctness gate
-    (first GATE_WINDOW entries get a row this round):
-
-    1. ``RECERTIFY`` — certified queries whose code changed this
-       round. These outrank everything: their on-disk rows were earned
-       by OLD code, so until re-verified the correctness record
-       overstates what's proven — a stale green row is worse than a
-       missing one (which the next tier merely has to wait for);
-    2. never-certified queries (registration order) — each must land
-       its first row; when declarations outnumber the remaining slots
-       the newest spill to the FRONT of next round's queue
-       (registration order is stable);
-    3. the remaining certified queries, rotated left by a round-derived
-       offset so successive rounds re-verify a different slice instead
-       of permanently parking the same ~35 names past the window.
-
-    Deterministic within a round (the offset depends only on the
-    CORRECTNESS files already on disk)."""
-    load_all()
-    pending = [n for n in QUERIES if n not in CERTIFIED]
-    recert = [n for n in QUERIES if n in CERTIFIED and n in RECERTIFY]
-    tail = sorted(n for n in QUERIES if n in CERTIFIED and n not in RECERTIFY)
-    if tail:
-        off = (_round_number() * GATE_WINDOW) % len(tail)
-        tail = tail[off:] + tail[:off]
-    return {n: QUERIES[n] for n in (*recert, *pending, *tail)}
-
-
 def load_all() -> None:
     """Import every module that registers queries (idempotent)."""
     # Imports are inside the function to avoid circular imports at
@@ -451,23 +93,9 @@ def load_all() -> None:
     from kafka_to_parquet_spark.llm import multimodal  # noqa: F401
     from kafka_to_parquet_spark.llm import linalg  # noqa: F401
     from kafka_to_parquet_spark.llm import pipeline  # noqa: F401
-
-    # batch7 stays LAST: the driver's gate takes never-certified
-    # queries in registration order, and round 7 opened with 37
-    # round-6 declarations still waiting for their first row — new
-    # declarations must queue behind them (see batch7's docstring).
     from kafka_to_parquet_spark.operators import batch7  # noqa: F401
-    # batch8 stays after batch7 for the same reason: round-8
-    # declarations queue behind any earlier never-certified names.
     from kafka_to_parquet_spark.operators import batch8  # noqa: F401
-    # batch9 (round-10 session additions) registers LAST so its
-    # never-certified names queue behind every earlier declaration.
     from kafka_to_parquet_spark.operators import batch9  # noqa: F401
-    # batch10 (round-11 session additions): same last-in-line rule.
     from kafka_to_parquet_spark.operators import batch10  # noqa: F401
-
-    # batch11 (round-12 session additions): same last-in-line rule.
     from kafka_to_parquet_spark.operators import batch11  # noqa: F401
-
-    # batch12 (round-13 session additions): same last-in-line rule.
     from kafka_to_parquet_spark.operators import batch12  # noqa: F401

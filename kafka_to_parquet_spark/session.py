@@ -9,7 +9,9 @@ Local-mode defaults chosen for the test harness (local[N] on a 32-core,
   2-3× total executor cores, or left to AQE's coalescing);
 - UTC session timezone so timestamp semantics match the DuckDB oracle
   and are host-independent;
-- Arrow enabled for any Pandas-UDF path.
+- Arrow enabled for any Pandas-UDF path;
+- driver heap sized from the host (half of physical memory, capped at
+  48g) unless $SPARK_GRAFT_DRIVER_MEM sets it.
 """
 
 from __future__ import annotations
@@ -17,6 +19,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """Half of MemTotal, capped at 48g. A heap sized past physical RAM
+    grows beyond it before GC reclaims anything, and the kernel then
+    OOM-kills the JVM (a 48g heap did so on a 15 GiB host)."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    return f"{min(kb // 2 // 1024, 48 * 1024)}m"
 
 
 def get_spark(app_name: str = "kafka_to_parquet_spark", cpus: int | None = None) -> SparkSession:
@@ -51,7 +65,10 @@ def get_spark(app_name: str = "kafka_to_parquet_spark", cpus: int | None = None)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/ktps_warehouse")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")

@@ -34,9 +34,9 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.registry import query
+from kafka_to_parquet_spark.sources.kafka import payload_column
 from kafka_to_parquet_spark.sources.kafka_analog import (
     BATCH_SIZE,
     kafka_records,
@@ -61,11 +61,7 @@ def write_partition_batches(
     on it performs the write.
     """
     os.makedirs(out_dir, exist_ok=True)
-    decoded = records.select(
-        "partition",
-        "offset",
-        F.coalesce(F.col("value").cast("string"), F.lit("")).alias("b"),
-    )
+    decoded = records.select("partition", "offset", payload_column())
     batched = with_batch_id(decoded, batch_size)
 
     def _write_group(pdf: pd.DataFrame) -> pd.DataFrame:

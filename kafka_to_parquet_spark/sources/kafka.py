@@ -21,7 +21,7 @@ exercise the identical DataFrame logic through the brokerless analog in
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # The Kafka source's fixed schema (public Spark docs: Structured
@@ -84,17 +84,26 @@ def kafka_batch(
     )
 
 
-def decode_payload(df: DataFrame) -> DataFrame:
-    """S3 + P1: project to the decoded payload only, with the
-    reference's null semantics — missing or invalid-UTF-8 payload
-    becomes the empty string, and the column is non-nullable
-    (main.rs:240-247; output schema REQUIRED, main.rs:113-117).
+def payload_column() -> Column:
+    """S3: the decoded payload column ``b`` — ``value`` as UTF-8 text,
+    with a missing or invalid-UTF-8 payload becoming the empty string
+    (main.rs:240-247). Non-nullable (output schema REQUIRED,
+    main.rs:113-117).
 
-    Spark's binary→string cast never fails (invalid bytes are
-    replaced), so ``coalesce(cast, '')`` covers both the ``None`` and
-    ``Err`` arms of the reference's match.
-    """
-    return df.select(F.coalesce(F.col("value").cast("string"), F.lit("")).alias("b"))
+    Spark's binary→string cast keeps invalid bytes as they are, so the
+    ``Err`` arm of the reference's match needs the explicit
+    ``is_valid_utf8`` test; ``coalesce(…, '')`` then covers both it and
+    the ``None`` arm. Every decode site (``decode_payload``, the analog
+    queries, the parquet sink) uses this one expression."""
+    s = F.col("value").cast("string")
+    return F.coalesce(F.when(F.is_valid_utf8(s), s), F.lit("")).alias("b")
+
+
+def decode_payload(df: DataFrame) -> DataFrame:
+    """S3 + P1: project to the decoded payload only (``payload_column``):
+    a missing or invalid-UTF-8 payload becomes the empty string, and
+    the column is non-nullable."""
+    return df.select(payload_column())
 
 
 def write_kafka(df: DataFrame, brokers: str, topic: str) -> None:

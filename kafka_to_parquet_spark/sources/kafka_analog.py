@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_to_parquet_spark.registry import query
+from kafka_to_parquet_spark.sources.kafka import payload_column
 from kafka_to_parquet_spark.tables import load
 
 N_PARTITIONS = 4
@@ -79,14 +80,10 @@ FROM ({_ANALOG_SQL})
 """,
 )
 def q_decode_utf8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S3: payload decode; None/invalid-UTF-8 → "" (main.rs:240-247).
-    ``coalesce(cast(value as string), '')`` — row count preserved."""
+    """S3: payload decode; None/invalid-UTF-8 → "" (main.rs:240-247,
+    ``kafka.payload_column``) — row count preserved."""
     rec = kafka_records(spark, sf_dir)
-    return rec.select(
-        "offset",
-        "partition",
-        F.coalesce(F.col("value").cast("string"), F.lit("")).alias("b"),
-    )
+    return rec.select("offset", "partition", payload_column())
 
 
 @query(
@@ -100,7 +97,7 @@ def q_project_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     main.rs:249-255). Catalyst prunes the parquet scan to the columns
     feeding ``value``."""
     rec = kafka_records(spark, sf_dir)
-    return rec.select(F.coalesce(F.col("value").cast("string"), F.lit("")).alias("b"))
+    return rec.select(payload_column())
 
 
 @query(

@@ -18,7 +18,7 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="session")
 def spark():
     registry.load_all()
-    s = get_spark("tests", cpus=8)
+    s = get_spark("tests")
     yield s
 
 

@@ -35,17 +35,12 @@ def test_shard_balance_reconciles_with_postings(run, spark, sf_dir):
         assert r.n_tokens <= r.n_postings
 
 
-def test_shard_balance_certifies_selection_rule(run, spark, sf_dir, monkeypatch):
+def test_shard_balance_certifies_selection_rule(run, spark, sf_dir):
     """auto_shards must equal what minhash.ppjoin_shards actually
-    selects for the same corpus (env cleared), for any per-pass
-    budget — the column exists to certify the Python arithmetic.
-    monkeypatch.delenv (not os.environ.pop) so a user-pinned regime is
-    restored after the test instead of stripped for the rest of the
-    pytest process (round-13 advisor item 1)."""
+    selects for the same corpus, for any per-pass budget — the column
+    exists to certify the Python arithmetic."""
     from kafka_to_parquet_spark.llm import minhash
 
-    monkeypatch.delenv("KTPS_PPJOIN_SHARDS", raising=False)
-    monkeypatch.delenv("KTPS_PPJOIN_TARGET_POSTINGS", raising=False)
     rows = run("q_shard_balance").collect()
     reported = {r.auto_shards for r in rows}
     assert reported == {minhash.ppjoin_shards(spark, sf_dir)}

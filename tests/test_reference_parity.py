@@ -92,6 +92,33 @@ def test_sink_batch_size_edges(spark, sf_dir):
     assert all(m["batch_id"] == 0 for m in manifest)
 
 
+def test_invalid_utf8_payload_becomes_empty_string(spark):
+    """main.rs:240-247: an invalid-UTF-8 payload decodes to "" exactly
+    like a missing one, through ``decode_payload`` and through the
+    parquet sink (which must write it, not fail in Arrow)."""
+    import pyarrow.parquet as pq
+
+    from kafka_to_parquet_spark.sources.kafka import decode_payload
+
+    values = [b"\xff\xfebad", None, b"ok", "café".encode(), b"\xc3"]
+    expected = ["", "", "ok", "café", ""]
+    rec = spark.createDataFrame(
+        [(0, i, v) for i, v in enumerate(values)],
+        "partition int, offset long, value binary",
+    )
+    decoded = decode_payload(rec)
+    assert not decoded.schema["b"].nullable
+    assert sorted(r["b"] for r in decoded.collect()) == sorted(expected)
+
+    out = tempfile.mkdtemp(prefix="ktps_sink_utf8_")
+    manifest = write_partition_batches(rec, out, batch_size=2).collect()
+    assert sorted(m["batch_id"] for m in manifest) == [0, 1, 2]
+    back = []
+    for b in range(3):
+        back += pq.read_table(os.path.join(out, f"partition_0_batch_{b}.parquet"))["b"].to_pylist()
+    assert back == expected
+
+
 def test_synth_generator_shape(run):
     """S7 (main.rs:59-96): N messages, payload 'Message {i}', key
     'Key {i}', one header header_key=header_value."""

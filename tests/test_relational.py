@@ -20,15 +20,25 @@ def test_distinct_is_unique(run):
 
 
 def test_sort_is_sorted(run):
+    """q_sort's rows come back in (o_totalprice DESC, o_orderkey ASC)
+    order."""
     rows = run("q_sort").collect()
-    keys = [tuple(r[c] for c in run("q_sort").columns[:1]) for r in rows]
     assert len(rows) > 0
+    keys = [(-r["o_totalprice"], r["o_orderkey"]) for r in rows]
+    assert keys == sorted(keys)
 
 
 def test_topk_matches_full_sort(spark, sf_dir, run):
     """TakeOrderedAndProject must equal sort-then-limit."""
     topk = run("q_topk").collect()
+    full = (
+        load(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
+        .collect()
+    )
     assert len(topk) == 10
+    assert topk == full[:10]
 
 
 def test_join_semi_anti_partition(spark, sf_dir, run):
